@@ -32,19 +32,9 @@ def mag_err(flux: Column, flux_err: Column) -> Column:
     return 1.08574 * flux_err / flux
 
 
-def euclid_dist(dx: Column, dy: Column) -> Column:
-    """Star separation ``sqrt(dx²+dy²)`` (core.py:170, core.py:326)."""
-    return F.sqrt(F.pow(dx, 2) + F.pow(dy, 2))
-
-
 def julian_date(ts: Column) -> Column:
     """Timestamp -> JD: ``unix_seconds/86400 + 2440587.5`` (p_io.py:50)."""
     return ts.cast("double") / 86400.0 + JD_UNIX_EPOCH
-
-
-def mid_exposure_jd(ts: Column, exptime_s: Column) -> Column:
-    """JD of mid-exposure: ``jd + (exptime/2)/86400`` (p_io.py:51-53)."""
-    return julian_date(ts) + exptime_s / 2.0 / 86400.0
 
 
 def phase_fold(t: Column, t0: float, period: float) -> Column:

@@ -1,6 +1,6 @@
 """Text-analysis column expressions shared by the LLM-data queries.
 
-JVM-side only: tokenization, lexical diversity, quality gates — the
+JVM-side only: tokenization and the quality gate — the
 building blocks of queries/llm.py, importable for ad-hoc pipelines.
 """
 
@@ -16,30 +16,6 @@ TOKEN_PATTERN = r"\s+"
 
 def tokens(text: Column) -> Column:
     return F.split(text, TOKEN_PATTERN)
-
-
-def token_count(text: Column) -> Column:
-    return F.size(tokens(text))
-
-
-def vocab_size(text: Column) -> Column:
-    return F.size(F.array_distinct(tokens(text)))
-
-
-def lexical_diversity(text: Column) -> Column:
-    """distinct tokens / total tokens — 1.0 means no repetition."""
-    return vocab_size(text).cast("double") / token_count(text)
-
-
-def length_score(n_chars: Column, saturation: float = 400.0) -> Column:
-    """Length signal saturating at ``saturation`` chars."""
-    return F.least(n_chars.cast("double") / saturation, F.lit(1.0))
-
-
-def quality_score(text: Column, n_chars: Column) -> Column:
-    """The composite used by q_doc_quality: length + diversity, equal
-    weights."""
-    return length_score(n_chars) * 0.5 + lexical_diversity(text) * 0.5
 
 
 def quality_verdict(text: Column) -> Column:

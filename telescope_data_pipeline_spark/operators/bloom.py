@@ -33,8 +33,6 @@ Both probes are exact over the same words table (property-tested equal);
 
 from __future__ import annotations
 
-import math
-
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -127,10 +125,3 @@ def bloom_probe_join(df: DataFrame, col: str, words: DataFrame,
     return (joined.withColumn("_hit", hit)
             .groupBy(*df.columns)
             .agg(F.bool_and("_hit").alias(out_col)))
-
-
-def optimal_k(m_bits: int, n_items: int) -> int:
-    """Textbook k = (m/n) ln 2, clamped to [1, 16]."""
-    if n_items <= 0:
-        return 1
-    return max(1, min(16, round(m_bits / n_items * math.log(2))))

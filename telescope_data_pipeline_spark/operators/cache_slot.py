@@ -9,13 +9,16 @@ The bounded alternative: each operator module owns ONE slot. Owning a
 new DataFrame unpersists the previously-owned one, so executor storage
 is bounded to a single cached table per operator family regardless of
 how many times the operator is invoked in a session (the pattern
-simhash_near_duplicates introduced; factored here so prefix-sum and
-packing reuse it instead of leaking — round-3 ADVICE items).
+simhash_near_duplicates introduced; factored here so packing and the
+other slot owners reuse it instead of leaking — round-3 ADVICE items).
+``own`` is locked per slot, so concurrent query builders cannot strand
+a superseded cache.
 """
 
 from __future__ import annotations
 
 import logging
+import threading
 
 from pyspark.sql import DataFrame
 
@@ -59,6 +62,10 @@ class CacheSlot:
 
     def __init__(self) -> None:
         self._last: DataFrame | None = None
+        # own() is read-cache-evict-write on _last: without the lock two
+        # threads owning different DataFrames could both evict the same
+        # previous one and leave one new cache untracked (unbounded).
+        self._lock = threading.Lock()
 
     @classmethod
     def _probe(cls, df: DataFrame) -> bool:
@@ -87,9 +94,10 @@ class CacheSlot:
             return True
 
     def own(self, df: DataFrame) -> DataFrame:
-        prev = self._last
-        df = df.cache()
-        if prev is not None and not self._same_plan(prev, df):
-            prev.unpersist(blocking=False)
-        self._last = df
+        with self._lock:
+            prev = self._last
+            df = df.cache()
+            if prev is not None and not self._same_plan(prev, df):
+                prev.unpersist(blocking=False)
+            self._last = df
         return df

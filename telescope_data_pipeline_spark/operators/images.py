@@ -119,20 +119,6 @@ FWHM_SCHEMA = T.StructType([
 ])
 
 
-def _moment_sigma(cut: np.ndarray) -> float:
-    """Gaussian width from intensity-weighted second moments (the
-    curve_fit-free estimator; exact for a noiseless Gaussian)."""
-    cut = np.clip(cut, 0, None)
-    tot = cut.sum()
-    if tot <= 0:
-        return 0.0
-    yy, xx = np.mgrid[0 : cut.shape[0], 0 : cut.shape[1]]
-    cx = (xx * cut).sum() / tot
-    cy = (yy * cut).sum() / tot
-    var = (((xx - cx) ** 2 + (yy - cy) ** 2) * cut).sum() / tot / 2.0
-    return float(np.sqrt(max(var, 0.0)))
-
-
 def measure_fwhm(images: DataFrame, cut_half: int = 8) -> DataFrame:
     """Per-image FWHM from the brightest unsaturated star.
 

@@ -4,21 +4,20 @@ A window with ``orderBy`` and no ``partitionBy`` is a scale trap: Spark
 moves EVERY row into one partition to evaluate it (the plan shows a
 single-partition Exchange), so the classic running-total query stops
 scaling at exactly the moment it matters. The scalable form is the
-textbook two-phase scan, expressed here with DataFrame ops only:
+textbook two-phase scan, expressed here with lazy DataFrame ops only
+(``range_bucket._prefix_bases``):
 
 1. shard by an explicit range-bucket id computed FROM the order key
-   (``operators.range_bucket`` — deterministic, no boundary-sampling
-   pass, immune to recompute drift; shard i's keys precede shard
-   i+1's by construction);
-2. aggregate one subtotal per shard (tiny: ≤ num_partitions rows),
-   prefix-sum those on the driver, and broadcast the per-shard
-   offsets back;
+   (deterministic, no boundary-sampling pass; shard i's keys precede
+   shard i+1's by construction);
+2. aggregate one subtotal per shard (tiny: ≤ num_buckets rows) and
+   prefix-sum those over a bucket-id window into per-shard bases,
+   broadcast back;
 3. a shard-LOCAL window (partitionBy the bucket id) adds the local
-   running sum to the shard's offset.
+   running sum to the shard's base.
 
-Cost: one min/max scan + one hash exchange + one ≤n-row collect + one
-map-side join — versus the single-partition window's "ship 100 TB to
-one task".
+No driver action and no cache: the query that consumes the prefix sum
+runs all of it inside its own plan.
 """
 
 from __future__ import annotations
@@ -26,88 +25,25 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
-from .cache_slot import CacheSlot
-from .range_bucket import bucketed_prefix_bases
+from .range_bucket import _prefix_bases
 
-__all__ = ["distributed_prefix_sum"]
-
-#: Bounded cache: one range-partitioned table per session, not one per
-#: invocation (round-3 ADVICE — the cache() below was never unpersisted).
-#: Because the bucket id is a pure function of the key, eviction can
-#: only cost recompute, never a shard-identity drift.
-_SLOT = CacheSlot()
-
-_INTEGRAL = (T.ByteType, T.ShortType, T.IntegerType, T.LongType)
-_FLOATING = (T.FloatType, T.DoubleType)
-
-
-def distributed_prefix_sum(df: DataFrame, order_col: str, value_col: str,
-                           out_col: str = "cum",
-                           num_partitions: int | None = None) -> DataFrame:
-    """Add ``out_col`` = cumulative sum of ``value_col`` over the global
-    ``order_col`` order (inclusive of the current row), computed without
-    ever concentrating the data on one task.
-
-    ``order_col`` must be unique and non-null (it defines the total
-    order; ties would make "the previous row" ambiguous under any
-    engine, and a NULL key raises executor-side from the bucket
-    expression). Supported key types: integral, date, timestamp —
-    cast or derive a numeric key for anything else.
-    """
-    spark = df.sparkSession
-    n = num_partitions or spark.sparkContext.defaultParallelism
-    # Offset type follows the value column: integral columns accumulate
-    # into long, float/double into double (a hardcoded `long` schema made
-    # createDataFrame reject float subtotals — round-3 ADVICE).
-    vt = df.schema[value_col].dataType
-    if isinstance(vt, _INTEGRAL):
-        off_type, zero = "long", 0
-    elif isinstance(vt, _FLOATING):
-        off_type, zero = "double", 0.0
-    else:
-        raise TypeError(
-            f"distributed_prefix_sum: value column {value_col!r} has type "
-            f"{vt.simpleString()}; only integral and float/double columns "
-            f"are supported (cast decimals explicitly to pick a semantics)")
-    # Shared two-phase scaffold (range_bucket.bucketed_prefix_bases):
-    # bucket + cache + per-bucket subtotal + driver prefix fold. The
-    # subtotal collect is the first action over the cached table, so it
-    # materializes every partition itself.
-    ranged, off = bucketed_prefix_bases(
-        df, order_col, n, measure=F.sum(value_col), slot=_SLOT, zero=zero)
-    if ranged is None:  # empty input: keep schema, zero rows
-        return df.withColumn(out_col, F.lit(None).cast(off_type))
-    local = (W.partitionBy("_pid").orderBy(order_col)
-             .rowsBetween(W.unboundedPreceding, W.currentRow))
-    return (ranged.join(F.broadcast(off), "_pid")
-            .withColumn(out_col,
-                        F.sum(value_col).over(local)
-                        + F.col("_base").cast(off_type))
-            .drop("_pid", "_base"))
+__all__ = ["lazy_prefix_sum", "lazy_prefix_sums"]
 
 
 def lazy_prefix_sum(df: DataFrame, bucket_col: str, order_cols: list[str],
                     value_col: str, out_col: str = "cum",
                     num_buckets: int | None = None) -> DataFrame:
-    """Fully LAZY sibling of :func:`distributed_prefix_sum`: cumulative
-    sum of ``value_col`` over the total order of ``order_cols``, with
-    zero driver actions and zero caches — the per-bucket base table is
-    itself tiny (≤ num_buckets rows), so its prefix fold is a window
-    over bucket ids, not a driver loop (the grouped_cum_counts shape,
-    operators/rank.py).
+    """Add ``out_col`` = cumulative sum of ``value_col`` over the total
+    order of ``order_cols`` (inclusive of the current row), computed
+    without ever concentrating the data on one task.
 
-    ``bucket_col``: an integral column MONOTONE in the total order
-    (ties stay inside one bucket and resolve locally by the full
-    ``order_cols``); must be non-null — a NULL has no position in a
-    total order, so the bucket expression raises at runtime, the same
-    contract as ``range_bucket_id``.
-
-    Use this form when the prefix sum feeds ONE downstream consumer in
-    the same job (no cache needed) and construction-time Spark jobs are
-    unwanted; use ``distributed_prefix_sum`` when the bucketed relation
-    is consumed repeatedly (its CacheSlot pays off).
+    ``bucket_col``: an integral, date or timestamp column MONOTONE in
+    the total order (ties stay inside one bucket and resolve locally by
+    the full ``order_cols``); must be non-null — a NULL has no position
+    in a total order, so the bucket expression raises at runtime. The
+    sum's type follows ``value_col`` (integral → long, float/double →
+    double, decimal → decimal).
     """
     return lazy_prefix_sums(df, bucket_col, order_cols,
                             {value_col: out_col}, num_buckets)
@@ -116,37 +52,16 @@ def lazy_prefix_sum(df: DataFrame, bucket_col: str, order_cols: list[str],
 def lazy_prefix_sums(df: DataFrame, bucket_col: str,
                      order_cols: list[str], values: dict[str, str],
                      num_buckets: int | None = None) -> DataFrame:
-    """Multi-measure form of :func:`lazy_prefix_sum` (round 12): one
-    bucketed two-phase pass produces the cumulative sum of EVERY
+    """Multi-measure form of :func:`lazy_prefix_sum`: one bucketed
+    two-phase pass produces the cumulative sum of EVERY
     ``values[value_col] = out_col`` measure over the same total order —
     one shuffle and one per-bucket base window regardless of how many
     measures ride along (q_energy_distance needs four; four separate
     calls would plan four pipelines over the same input)."""
-    n = num_buckets or df.sparkSession.sparkContext.defaultParallelism
-    bounds = df.agg(F.min(bucket_col).cast("long").alias("_lo"),
-                    F.max(bucket_col).cast("long").alias("_hi"))
-    span = F.col("_hi").cast("double") - F.col("_lo").cast("double") + 1.0
-    raw = F.floor((F.col(bucket_col).cast("double")
-                   - F.col("_lo").cast("double")) * n / span).cast("int")
-    err = F.raise_error(F.concat(F.lit(
-        f"lazy_prefix_sum: NULL {bucket_col} has no position in a "
-        "total order — filter or impute NULL keys first")))
-    pid = F.when(F.col(bucket_col).isNotNull(),
-                 F.least(F.lit(n - 1), F.greatest(F.lit(0), raw))) \
-        .otherwise(err.cast("int"))
-    b = df.crossJoin(F.broadcast(bounds)).withColumn("_pid", pid) \
-        .drop("_lo", "_hi")
-    totals = b.groupBy("_pid").agg(
-        *[F.sum(vc).alias(f"_m_{i}") for i, vc in enumerate(values)])
-    wt = (W.orderBy("_pid")
-          .rowsBetween(W.unboundedPreceding, W.currentRow))
-    bases = totals.select(
-        "_pid",
-        *[(F.sum(f"_m_{i}").over(wt) - F.col(f"_m_{i}"))
-          .alias(f"_base_{i}") for i in range(len(values))])
+    out = _prefix_bases(df, bucket_col, [F.sum(vc) for vc in values],
+                        num_buckets)
     local = (W.partitionBy("_pid").orderBy(*order_cols)
              .rowsBetween(W.unboundedPreceding, W.currentRow))
-    out = b.join(F.broadcast(bases), "_pid")
     for i, (vc, oc) in enumerate(values.items()):
         out = out.withColumn(
             oc, F.col(f"_base_{i}") + F.sum(vc).over(local))

@@ -2,13 +2,14 @@
 
 ``row_number() OVER (ORDER BY ...)`` with no partitioning is the same
 scale trap as the global cumulative sum: one task receives every row.
-The two-phase form here mirrors ``prefix_sum``:
+The two-phase form here is the ``prefix_sum`` one, folding row counts
+(``range_bucket._prefix_bases`` — lazy, no driver action, no cache):
 
 1. bucket rows by an integral projection of the sort key
-   (``range_bucket`` — deterministic, order-consistent: bucket i's keys
-   all precede bucket i+1's);
-2. count rows per bucket (≤ n integers), prefix-sum the counts on the
-   driver into per-bucket bases;
+   (deterministic, order-consistent: bucket i's keys all precede
+   bucket i+1's);
+2. count rows per bucket (≤ n integers) and prefix-sum the counts over
+   a bucket-id window into per-bucket bases;
 3. global position = bucket base + (local row_number within the
    bucket) — a bucket-partitioned window, parallel everywhere.
 
@@ -24,19 +25,15 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
-from .cache_slot import CacheSlot
-from .range_bucket import bucketed_prefix_bases
+from .range_bucket import _prefix_bases
 
-__all__ = ["distributed_row_number", "lazy_row_number",
-           "grouped_cum_counts"]
-
-_SLOT = CacheSlot()
+__all__ = ["lazy_row_number", "grouped_cum_counts"]
 
 
-def distributed_row_number(df: DataFrame, order_cols: list[str],
-                           bucket_key: Column | str | None = None,
-                           out_col: str = "position",
-                           num_partitions: int | None = None) -> DataFrame:
+def lazy_row_number(df: DataFrame, order_cols: list[str],
+                    bucket_key: Column | str | None = None,
+                    out_col: str = "position",
+                    num_buckets: int | None = None) -> DataFrame:
     """Add ``out_col`` = 0-based global position of each row under the
     total order of ``order_cols`` (which must be unique and non-null as
     a tuple), without a single-partition sort.
@@ -46,75 +43,22 @@ def distributed_row_number(df: DataFrame, order_cols: list[str],
     timestamp type). For string sort keys pass a numeric prefix
     projection, e.g. ``F.conv(F.substring(h, 1, 15), 16, 10)`` for an
     md5 hex digest — equal-length hex compares as its numeric value.
+
+    Positions do not depend on the bucketing: the bucket id is
+    monotone in the order key, ties stay inside one bucket, and the
+    local window resolves the full ``order_cols`` — so bucket-boundary
+    differences cannot move a row's global position.
     """
-    n = num_partitions or df.sparkSession.sparkContext.defaultParallelism
-    key = "_rk" if bucket_key is not None else order_cols[0]
-    work = df if bucket_key is None else \
-        df.withColumn("_rk", F.col(bucket_key).cast("long")
-                      if isinstance(bucket_key, str) else
-                      bucket_key.cast("long"))
-    # Shared two-phase scaffold (range_bucket.bucketed_prefix_bases):
-    # bucket + cache + per-bucket row count + driver prefix fold.
-    bucketed, base = bucketed_prefix_bases(
-        work, key, n, measure=F.count(F.lit(1)), slot=_SLOT, zero=0)
-    if bucketed is None:  # empty input
-        return df.withColumn(out_col, F.lit(None).cast("long"))
+    if bucket_key is None:
+        work, key = df, order_cols[0]
+    else:
+        rk = F.col(bucket_key) if isinstance(bucket_key, str) else bucket_key
+        work, key = df.withColumn("_rk", rk.cast("long")), "_rk"
+    b = _prefix_bases(work, key, [F.count(F.lit(1))], num_buckets)
     local = W.partitionBy("_pid").orderBy(*order_cols)
-    return (bucketed.join(F.broadcast(base), "_pid")
-            .withColumn(out_col,
-                        F.col("_base") + F.row_number().over(local) - 1)
-            .drop("_pid", "_base", *(["_rk"] if bucket_key is not None else [])))
-
-
-def lazy_row_number(df: DataFrame, order_cols: list[str],
-                    bucket_key: Column | str | None = None,
-                    out_col: str = "position",
-                    num_buckets: int | None = None) -> DataFrame:
-    """Fully LAZY twin of :func:`distributed_row_number` (r13): same
-    0-based global position under the total order of ``order_cols``,
-    with ZERO driver actions and ZERO caches — the per-bucket base
-    table is tiny (≤ num_buckets rows), so its prefix fold is a window
-    over bucket ids instead of a driver loop (the grouped_cum_counts /
-    lazy_prefix_sum shape). Use this form when the ranked relation
-    feeds ONE downstream consumer inside one query: the CacheSlot form
-    pays an eager count() materialization job plus an in-memory write
-    that exchange reuse renders pointless there (the q_hits_step
-    un-pinning rule). Keep ``distributed_row_number`` when the ranked
-    table is consumed across separate actions.
-
-    Positions are IDENTICAL to the eager form for any order-consistent
-    bucketing: the bucket id is monotone in the order key, ties stay
-    inside one bucket, and the local window resolves the full
-    ``order_cols`` — so bucket-boundary differences cannot move a row's
-    global position.
-    """
-    n = num_buckets or df.sparkSession.sparkContext.defaultParallelism
-    key = (F.col(order_cols[0]) if bucket_key is None else
-           F.col(bucket_key) if isinstance(bucket_key, str) else
-           bucket_key).cast("long")
-    work = df.withColumn("_rk", key)
-    bounds = work.agg(F.min("_rk").alias("_lo"), F.max("_rk").alias("_hi"))
-    span = F.col("_hi").cast("double") - F.col("_lo").cast("double") + 1.0
-    raw = F.floor((F.col("_rk").cast("double")
-                   - F.col("_lo").cast("double")) * n / span).cast("int")
-    err = F.raise_error(F.lit(
-        "lazy_row_number: NULL bucket key has no position in a total "
-        "order — filter or impute NULL keys first"))
-    pid = F.when(F.col("_rk").isNotNull(),
-                 F.least(F.lit(n - 1), F.greatest(F.lit(0), raw))) \
-        .otherwise(err.cast("int"))
-    b = (work.crossJoin(F.broadcast(bounds))
-         .withColumn("_pid", pid).drop("_lo", "_hi"))
-    totals = b.groupBy("_pid").agg(F.count(F.lit(1)).alias("_m"))
-    wt = (W.orderBy("_pid")
-          .rowsBetween(W.unboundedPreceding, W.currentRow))
-    bases = totals.select(
-        "_pid", (F.sum("_m").over(wt) - F.col("_m")).alias("_base"))
-    local = W.partitionBy("_pid").orderBy(*order_cols)
-    return (b.join(F.broadcast(bases), "_pid")
-            .withColumn(out_col,
-                        F.col("_base") + F.row_number().over(local) - 1)
-            .drop("_pid", "_base", "_rk"))
+    return (b.withColumn(out_col,
+                         F.col("_base_0") + F.row_number().over(local) - 1)
+            .drop("_pid", "_base_0", "_rk"))
 
 
 def grouped_cum_counts(df: DataFrame, grp_col: str, val_col: str,
@@ -127,30 +71,19 @@ def grouped_cum_counts(df: DataFrame, grp_col: str, val_col: str,
     value v is ``_cum_before + 1 .. _cum_before + _c``, so the exact
     integer doubled average rank is ``2*_cum_before + _c + 1``).
 
-    This is the GROUPED twin of ``distributed_row_number``: a plain
+    This is the GROUPED form of :func:`lazy_row_number`: a plain
     ``W.partitionBy(grp).orderBy(val)`` cumulative count puts one
     group's whole value stream through ONE task — with few groups
     (e.g. 5 order priorities) that is the skewed single-task sort the
     two-phase shape exists to avoid. Here the cumulative count is
-    split as bucket base + local cum, and — unlike the driver-folded
-    ``distributed_row_number`` — every step stays LAZY (no collect, no
-    cache): the per-(grp, bucket) base table is itself tiny (≤ |groups|
-    x num_buckets rows), so its prefix fold is a window over bucket
-    ids, not a driver loop:
+    split as bucket base + local cum over (grp, bucket) windows —
+    parallel across buckets regardless of how few groups exist. The
+    distinct (grp, val) aggregate's shuffle is planned under both
+    consumers of the scaffold and deduplicated by ReuseExchange.
 
-    1. aggregate to distinct (grp, val) counts (map-side combined; its
-       shuffle is planned under both consumers below and deduplicated
-       by ReuseExchange);
-    2. value-range bucket ids from a 1-row (lo, hi) broadcast — the
-       ``range_bucket_id`` monotone double arithmetic, inlined lazily;
-    3. per-(grp, bucket) totals, prefix-summed per group over the
-       bucket-id window (≤ num_buckets rows per group), broadcast back;
-    4. local cumulative count inside each (grp, bucket) window —
-       parallel across buckets regardless of how few groups exist.
-
-    ``val_col`` must be integral and non-null (a NULL has no position
-    in a total order: the bucket id expression raises at runtime, the
-    same contract as ``range_bucket_id``).
+    ``val_col`` must be integral/date/timestamp and non-null (a NULL
+    has no position in a total order: the bucket id expression raises
+    at runtime).
 
     ``extra_aggs``: additional aggregate Columns evaluated in the same
     distinct-value groupBy and carried through to the output — this
@@ -159,34 +92,13 @@ def grouped_cum_counts(df: DataFrame, grp_col: str, val_col: str,
     the jump-point table instead of joining the rank map back onto the
     fact stream.
     """
-    n = num_buckets or df.sparkSession.sparkContext.defaultParallelism
     c = (df.groupBy(grp_col, val_col)
          .agg(F.count(F.lit(1)).alias("_c"), *extra_aggs))
-    bounds = c.agg(F.min(val_col).cast("long").alias("_lo"),
-                   F.max(val_col).cast("long").alias("_hi"))
-    # floor((v - lo) * n / span) in DOUBLE: monotone, overflow-safe for
-    # full-range keys; clamp absorbs the rounding edge at exactly n.
-    span = F.col("_hi").cast("double") - F.col("_lo").cast("double") + 1.0
-    raw = F.floor((F.col(val_col).cast("double")
-                   - F.col("_lo").cast("double")) * n / span).cast("int")
-    err = F.raise_error(F.concat(F.lit(
-        f"grouped_cum_counts: NULL {val_col} has no position in a "
-        "total order — filter or impute NULL values first")))
-    pid = F.when(F.col(val_col).isNotNull(),
-                 F.least(F.lit(n - 1), F.greatest(F.lit(0), raw))) \
-        .otherwise(err.cast("int"))
-    b = c.crossJoin(F.broadcast(bounds)).withColumn("_pid", pid) \
-        .drop("_lo", "_hi")
-    totals = b.groupBy(grp_col, "_pid").agg(F.sum("_c").alias("_m"))
-    wt = (W.partitionBy(grp_col).orderBy("_pid")
-          .rowsBetween(W.unboundedPreceding, W.currentRow))
-    bases = totals.select(
-        grp_col, "_pid",
-        (F.sum("_m").over(wt) - F.col("_m")).alias("_base"))
+    b = _prefix_bases(c, val_col, [F.sum("_c")], num_buckets,
+                      groups=(grp_col,))
     local = (W.partitionBy(grp_col, "_pid").orderBy(val_col)
              .rowsBetween(W.unboundedPreceding, W.currentRow))
-    return (b.join(F.broadcast(bases), [grp_col, "_pid"])
-            .withColumn("_cum_before",
-                        F.col("_base") + F.sum("_c").over(local)
-                        - F.col("_c"))
-            .drop("_pid", "_base"))
+    return (b.withColumn("_cum_before",
+                         F.col("_base_0") + F.sum("_c").over(local)
+                         - F.col("_c"))
+            .drop("_pid", "_base_0"))

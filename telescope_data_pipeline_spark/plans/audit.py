@@ -35,10 +35,6 @@ def read_schemas(df: DataFrame) -> list[str]:
     return re.findall(r"ReadSchema: struct<([^>]*)>", formatted_plan(df))
 
 
-def has_node(df: DataFrame, node: str) -> bool:
-    return node in physical_plan(df)
-
-
 def has_codegen(df: DataFrame) -> bool:
     """Whole-stage codegen spans render as ``*(id)`` in the executed-plan
     string (the literal node name only appears pre-execution)."""

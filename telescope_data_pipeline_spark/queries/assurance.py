@@ -628,11 +628,10 @@ def q_hits_step(spark: SparkSession, sf_dir: str) -> DataFrame:
     why it wins there). Production additionally buckets edges by node
     so ITERATED steps reuse the layout across queries, and hot hub
     nodes take the salted two-stage aggregate from operators/skew.py."""
-    # r14 (guide SS2.3/SS1.2): this query is a chain of bounded
-    # aggregates/windows over mid-size shuffles with no output-
-    # expanding join, so the engine's 64 KB AQE coalesce floor only
-    # buys per-stage task overhead here; run it on the stock-floor
-    # child session (interleaved min3 A/B in OPTIMIZATION_r14.md).
+    # Stock-floor child session (Spark's 1 MB AQE coalesce floor): the
+    # interleaved min-of-3 A/B in OPTIMIZATION_r14.md (change 1 table)
+    # measured this query faster there than under the engine's 64 KB
+    # floor. Opt-in is by that measurement, not by plan shape.
     spark = stock_coalesce_floor(spark)
     od = load_table(spark, sf_dir, "orders")
     li = load_table(spark, sf_dir, "lineitem")

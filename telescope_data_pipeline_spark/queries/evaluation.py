@@ -355,7 +355,7 @@ def q_lift_gains(spark: SparkSession, sf_dir: str) -> DataFrame:
     sums rounded at 4/6.
 
     Scale: the global rank comes from operators/rank.py's TWO-PHASE
-    distributed_row_number (range-bucket + per-bucket bases + bucket-
+    lazy_row_number (range-bucket + per-bucket bases + bucket-
     partitioned window) — no single-partition sort anywhere (the
     q_auc_ranking round-6 lesson, applied from day one here). The
     decile groupBy is map-side combined onto 10 cells; the cumulative

@@ -865,12 +865,11 @@ def q_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
     range-buckets by doc_id, prefix-sums the ≤n per-bucket subtotals
     with a bucket-id window (bounded), and finishes with
     bucket-local windows — identical output, parallel everywhere.
-    All-integer outputs: no float parity risk. r13: switched from the
-    CacheSlot-backed ``distributed_prefix_sum`` to the fully-lazy twin
-    — this query is the prefix sum's ONLY consumer, so the cache paid
-    an eager materialization job + an in-memory write for nothing (the
-    q_hits_step un-pinning rule); the tokenize runs spread across
-    cores instead of one scan task."""
+    All-integer outputs: no float parity risk. The prefix sum is lazy
+    (no cache, no construction-time job): this query is its ONLY
+    consumer, so a cache would pay a materialization job + an
+    in-memory write for nothing (the q_hits_step un-pinning rule); the
+    tokenize runs spread across cores instead of one scan task."""
     from ..operators.prefix_sum import lazy_prefix_sum
 
     d = load_table(spark, sf_dir, "documents", spread=True)
@@ -1384,17 +1383,18 @@ def q_epoch_shuffle(spark: SparkSession, sf_dir: str) -> DataFrame:
     q_split_assign: no RNG state, engine-portable.
 
     Scale design: the naive form is row_number() over a global ORDER BY
-    — a single-partition sort. operators/rank.py::distributed_row_number
+    — a single-partition sort. operators/rank.py::lazy_row_number
     buckets by the digest's 60-bit numeric prefix (order-consistent
     with hex-string order), counts per bucket, prefix-folds ≤n bucket
-    bases on the driver, and ranks locally per bucket — the same
-    two-phase shape as the sequence-packing prefix sum."""
-    from ..operators.rank import distributed_row_number
+    bases over a bucket-id window, and ranks locally per bucket — the
+    same two-phase shape as the sequence-packing prefix sum, with no
+    Spark job at construction."""
+    from ..operators.rank import lazy_row_number
 
     d = load_table(spark, sf_dir, "documents")
     h = F.md5(F.concat(F.lit("epoch7:"), F.col("doc_id").cast("string")))
     t = d.select("doc_id", h.alias("h"))
-    out = distributed_row_number(
+    out = lazy_row_number(
         t, order_cols=["h", "doc_id"],
         bucket_key=F.conv(F.substring("h", 1, 15), 16, 10))
     return out.select("doc_id", "position")
@@ -1444,7 +1444,7 @@ def length_bucketed_batches(t: DataFrame, batch_size: int = 8,
     The naive rank-within-bucket is a per-bucket sort — with ~10
     buckets that is 10 giant partitions at corpus scale, the
     q_mix_corpus trap. Here the rank comes from ONE
-    ``distributed_row_number`` over the composite key bucket*span +
+    ``lazy_row_number`` over the composite key bucket*span +
     (doc_id - lo) (monotone: bucket-major, doc-minor), and each doc's
     within-bucket position is its global position minus its bucket's
     base (cumulative counts of earlier buckets — a ≤|buckets|-row
@@ -1459,7 +1459,7 @@ def length_bucketed_batches(t: DataFrame, batch_size: int = 8,
     a fixed shift would silently alias buckets for ids beyond it
     (64-bit snowflake ids overflow any hardcoded headroom); bucket <=
     63 means the key fits int64 whenever span < 2^57."""
-    from ..operators.rank import distributed_row_number
+    from ..operators.rank import lazy_row_number
 
     if id_bounds is None:
         lohi = t.select(F.min("doc_id").alias("lo"),
@@ -1476,7 +1476,7 @@ def length_bucketed_batches(t: DataFrame, batch_size: int = 8,
             "bucket-major composite key - densify ids (e.g. via "
             "q_epoch_shuffle positions) first")
     key = (F.col("bucket") * span + (F.col("doc_id") - lo)).alias("ok")
-    ranked = distributed_row_number(
+    ranked = lazy_row_number(
         t.withColumn("ok", key), order_cols=["ok"], out_col="gpos")
     bases = ranked.groupBy("bucket").agg(F.min("gpos").alias("base"))
     return (ranked.join(F.broadcast(bases), "bucket")
@@ -1861,7 +1861,7 @@ def q_split_stratified(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one hash shuffle on lang + per-stratum sort (languages are
     bounded-cardinality corpus slices). For a stratum too large for one
     sort partition, swap the window for the composite-key
-    ``distributed_row_number`` (the q_length_batches shape: lang-major,
+    ``lazy_row_number`` (the q_length_batches shape: lang-major,
     hash-minor) — same semantics, no giant partition. The stratum-size
     count rides the same window (zero extra shuffle)."""
     d = load_table(spark, sf_dir, "documents")
@@ -2641,9 +2641,9 @@ def q_shard_export(spark: SparkSession, sf_dir: str) -> DataFrame:
     membership, the q_compact_files contract applied to the export
     sink a training run actually consumes.
 
-    The running count is the distributed two-phase prefix sum
-    (operators/prefix_sum.py — no single-partition sort; the
-    q_pack_sequences scaffold). The unique order key is the 40-bit md5
+    The running count is the lazy two-phase prefix sum
+    (operators/prefix_sum.py::lazy_prefix_sum — no single-partition
+    sort; the q_pack_sequences scaffold). The unique order key is the 40-bit md5
     prefix * 2^20 + doc_id (60 bits, overflow-safe), with a LOUD runtime guard on the id span
     (composite-key aliasing rule): both engines order by the identical
     composite, so shard boundaries agree exactly.
@@ -2653,7 +2653,7 @@ def q_shard_export(spark: SparkSession, sf_dir: str) -> DataFrame:
     coalesce(1) — that serializes the whole plan)."""
     import tempfile
 
-    from ..operators.prefix_sum import distributed_prefix_sum
+    from ..operators.prefix_sum import lazy_prefix_sum
 
     d = load_table(spark, sf_dir, "documents")
     n_tok = F.coalesce(
@@ -2673,7 +2673,7 @@ def q_shard_export(spark: SparkSession, sf_dir: str) -> DataFrame:
              .otherwise(F.raise_error(F.lit(
                  "q_shard_export: doc_id exceeds the 2^20 "
                  "composite-key span")))))
-    c = distributed_prefix_sum(t, "okey", "n_tok", out_col="cum")
+    c = lazy_prefix_sum(t, "okey", ["okey"], "n_tok", out_col="cum")
     sharded = c.select(
         "doc_id", "n_tok", "hk",
         F.floor((F.col("cum") - F.col("n_tok")) / F.lit(4000.0))
@@ -3739,7 +3739,7 @@ def q_gini_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
     expression rounded at 6.
 
     Scale: the rank is operators/rank.py's TWO-PHASE
-    distributed_row_number (bucketed by the integral n_chars key) —
+    lazy_row_number (bucketed by the integral n_chars key) —
     no single-partition sort; the weighted sum is one map-side-combined
     agg. int64 holds i*x_i up to ~1e12 docs of ~1e6 chars."""
     from ..operators.rank import lazy_row_number

@@ -422,9 +422,9 @@ def q_lorenz_points(spark: SparkSession, sf_dir: str) -> DataFrame:
     through one ordered 10-row window.
 
     Scale: rank-by-size is inherently global, but never single-task —
-    positions come from operators/rank.py::distributed_row_number
-    (range-bucket by n_chars, per-bucket counts prefix-folded on the
-    driver, local per-bucket windows: the q_epoch_shuffle /
+    positions come from operators/rank.py::lazy_row_number
+    (range-bucket by n_chars, per-bucket counts prefix-folded over a
+    bucket-id window, local per-bucket windows: the q_epoch_shuffle /
     q_median_twopass two-pass shape), then the exact NTILE arithmetic
     maps position -> tile. Everything after the decile aggregate runs
     on 10 rows (the only SinglePartition exchange is that 10-row

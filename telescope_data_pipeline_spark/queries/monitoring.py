@@ -407,11 +407,10 @@ def q_mood_median(spark: SparkSession, sf_dir: str) -> DataFrame:
     lesson), reduced to ONE broadcast row; group counts are one
     map-side-combined groupBy; the only unpartitioned windows run over
     the <= k-group table."""
-    # r14 (guide SS2.3/SS1.2): this query is a chain of bounded
-    # aggregates/windows over mid-size shuffles with no output-
-    # expanding join, so the engine's 64 KB AQE coalesce floor only
-    # buys per-stage task overhead here; run it on the stock-floor
-    # child session (interleaved min3 A/B in OPTIMIZATION_r14.md).
+    # Stock-floor child session (Spark's 1 MB AQE coalesce floor): the
+    # interleaved min-of-3 A/B in OPTIMIZATION_r14.md (change 1 table)
+    # measured this query faster there than under the engine's 64 KB
+    # floor. Opt-in is by that measurement, not by plan shape.
     spark = stock_coalesce_floor(spark)
     d = load_table(spark, sf_dir, "orders").select(
         F.col("o_orderpriority").alias("grp"),

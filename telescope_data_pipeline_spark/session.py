@@ -8,8 +8,12 @@ deployment would use — AQE, Arrow, and UTC semantics are identical.
 from __future__ import annotations
 
 import os
+import threading
 
 from pyspark.sql import SparkSession
+
+#: Serializes creation of stock_coalesce_floor's child session.
+_STOCK_FLOOR_LOCK = threading.Lock()
 
 #: Shuffle partitions: match local cores while testing. On a real cluster
 #: this is overridden (or left to AQE coalescing) — AQE is enabled so the
@@ -94,10 +98,10 @@ def stock_coalesce_floor(spark: SparkSession) -> SparkSession:
     r13/r14 interleaved A/B measured q_spearman 4.4 s under the 64 KB
     floor vs 2.5-3.2 s at stock (same session, same host), while the
     expansion-join wins (q_semdedup 1.7 s, q_adamic_adar) stay intact
-    on the parent. Queries whose plans are long chains of bounded
-    aggregates/windows — and never expansion joins — opt into the stock
-    floor HERE, scoped to their own plan, instead of flipping the
-    session default that the expansion family depends on.
+    on the parent. Queries for which that interleaved A/B measured a
+    win (OPTIMIZATION_r14.md, change 1 table) opt into the stock floor
+    HERE, scoped to their own plan, instead of flipping the session
+    default that the expansion family depends on.
 
     At cluster scale bytes/parallelism >> 1 MB so neither floor ever
     binds — this is a local/small-shuffle trade only, which is why it
@@ -109,10 +113,16 @@ def stock_coalesce_floor(spark: SparkSession) -> SparkSession:
     identically.
     """
     child = getattr(spark, "_tdp_stock_floor_session", None)
-    if child is None:
-        child = spark.newSession()
-        child.conf.set(
-            "spark.sql.adaptive.coalescePartitions.minPartitionSize",
-            os.environ.get("SPARK_GRAFT_AQE_STOCK_FLOOR", "1MB"))
-        spark._tdp_stock_floor_session = child
+    if child is not None:
+        return child
+    # double-checked: concurrent query builders (threaded plan tests)
+    # must share ONE child, not race into creating and leaking several
+    with _STOCK_FLOOR_LOCK:
+        child = getattr(spark, "_tdp_stock_floor_session", None)
+        if child is None:
+            child = spark.newSession()
+            child.conf.set(
+                "spark.sql.adaptive.coalescePartitions.minPartitionSize",
+                os.environ.get("SPARK_GRAFT_AQE_STOCK_FLOOR", "1MB"))
+            spark._tdp_stock_floor_session = child
     return child

@@ -164,6 +164,29 @@ def write_stacked_fits(
     return rows.mapInPandas(write_kernel, schema=FITS_SINK_SCHEMA)
 
 
+def image_record(filename: str, px: np.ndarray,
+                 hdr: dict[str, str]) -> dict:
+    """One schemas.IMAGE record from decoded pixels + header (epoch_id
+    -1: the manifest join assigns it). Shared by ``scan_fits_dir`` and
+    the registered ``fits`` data source so both coerce header values
+    identically. A malformed AIRMASS/EXPTIME/DATE-OBS value raises
+    ValueError/TypeError HERE — callers call this inside their
+    failure-path ``try`` and drop the file."""
+    date_obs = hdr.get("DATE-OBS")
+    return {
+        "filename": filename, "epoch_id": -1,
+        "band": hdr.get("FILTER"),
+        "width": int(px.shape[1]), "height": int(px.shape[0]),
+        "pixels": np.asarray(px, dtype=np.float32).ravel(),
+        "airmass": float(hdr["AIRMASS"]) if "AIRMASS" in hdr else None,
+        "date_obs": (pd.to_datetime(date_obs).to_pydatetime()
+                     if date_obs is not None else None),
+        "exptime": float(hdr["EXPTIME"]) if "EXPTIME" in hdr else None,
+        "site_id": hdr.get("SITEID"),
+        "header": hdr,
+    }
+
+
 def scan_fits_dir(spark: SparkSession, path: str,
                   manifest: DataFrame | None = None) -> DataFrame:
     """binaryFile scan → decode → schemas.IMAGE rows.
@@ -183,24 +206,15 @@ def scan_fits_dir(spark: SparkSession, path: str,
             rows = []
             for fname, content in zip(pdf["filename"], pdf["content"]):
                 try:
-                    px, hdr = _decode_fits(bytes(content))
-                except (ValueError, struct.error):
+                    rows.append(image_record(
+                        fname, *_decode_fits(bytes(content))))
+                except (ValueError, TypeError, struct.error):
                     # Failure-path rule (SURVEY.md §7 #6): an undecodable
-                    # file is dropped, never fatal — at 100 TB one corrupt
-                    # object must not kill the job. (Production: route to
-                    # a quarantine sink instead of dropping.)
+                    # file or malformed header value is dropped, never
+                    # fatal — at 100 TB one corrupt object must not kill
+                    # the job. (Production: route to a quarantine sink
+                    # instead of dropping.)
                     continue
-                rows.append({
-                    "filename": fname, "epoch_id": -1,
-                    "band": hdr.get("FILTER"),
-                    "width": px.shape[1], "height": px.shape[0],
-                    "pixels": px.astype(np.float32).ravel(),
-                    "airmass": float(hdr["AIRMASS"]) if "AIRMASS" in hdr else None,
-                    "date_obs": pd.to_datetime(hdr.get("DATE-OBS")),
-                    "exptime": float(hdr["EXPTIME"]) if "EXPTIME" in hdr else None,
-                    "site_id": hdr.get("SITEID"),
-                    "header": hdr,
-                })
             yield pd.DataFrame(rows, columns=[f.name for f in IMAGE.fields])
 
     decoded = raw.mapInPandas(decode, schema=IMAGE)

@@ -59,35 +59,18 @@ def _list_fits(path: str) -> list[str]:
 
 
 def _decode_file(path: str, filename: str):
-    """One schemas.IMAGE row tuple, or None for an undecodable file."""
-    import numpy as np
-    import pandas as pd
+    """One schemas.IMAGE row tuple, or None for an undecodable file or
+    a malformed header value (``image_record`` coerces inside the try,
+    so such a file is dropped, never fatal)."""
+    from .fits import _decode_fits, image_record
 
-    from .fits import _decode_fits
-
-    # header-value coercion sits INSIDE the try: a decodable file with a
-    # malformed AIRMASS/EXPTIME/DATE-OBS value is dropped like any other
-    # undecodable file, never fatal (round-11 ADVICE item 2)
     try:
         with open(os.path.join(path, filename), "rb") as f:
-            px, hdr = _decode_fits(f.read())
-        date_obs = hdr.get("DATE-OBS")
-        return (
-            filename,
-            -1,  # epoch_id: assigned by the manifest join downstream
-            hdr.get("FILTER"),
-            int(px.shape[1]),
-            int(px.shape[0]),
-            [float(v) for v in np.asarray(px, dtype=np.float32).ravel()],
-            float(hdr["AIRMASS"]) if "AIRMASS" in hdr else None,
-            (pd.to_datetime(date_obs).to_pydatetime()
-             if date_obs is not None else None),
-            float(hdr["EXPTIME"]) if "EXPTIME" in hdr else None,
-            hdr.get("SITEID"),
-            hdr,
-        )
+            rec = image_record(filename, *_decode_fits(f.read()))
     except (ValueError, TypeError, struct.error, OSError):
         return None
+    rec["pixels"] = [float(v) for v in rec["pixels"]]
+    return tuple(rec[f.name] for f in IMAGE.fields)
 
 
 class _FitsBatchReader(DataSourceReader):

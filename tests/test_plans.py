@@ -20,6 +20,24 @@ from telescope_data_pipeline_spark.queries import get
 SF = "/root/testdata/sf0.01"
 
 
+def _assert_windows_bucketed(plan: str) -> None:
+    """Every window in ``plan`` must carry the range-bucket id ``_pid``
+    and the plan must hash-partition on it: a bare ``W.orderBy`` global
+    window would show an un-bucketed (data-column-only) windowspec and
+    ship the whole corpus to one task at 100 TB.
+
+    A ``"Exchange SinglePartition" not in plan`` ban cannot pin this:
+    the lazy range-bucket scaffold (operators/range_bucket.py) has two
+    BOUNDED single-partition steps, its 1-row min/max bounds and its
+    ≤num_buckets bases window."""
+    import re
+
+    specs = re.findall(r"windowspecdefinition\(([^)]*)\)", plan)
+    assert specs, plan
+    assert all("_pid" in s for s in specs), specs
+    assert "hashpartitioning(_pid" in plan, plan
+
+
 def test_flagship_broadcasts_dim_and_pushes_filters(spark):
     df = get("q_flagship").fn(spark, SF)
     df.collect()  # AQE finalizes (and annotates codegen) on execution of
@@ -169,20 +187,7 @@ def test_pack_sequences_no_single_partition_exchange(spark):
 
     df = get("q_pack_sequences").fn(spark, SF)
     df.collect()  # finalize AQE
-    plan = physical_plan(df)
-    # Every window must involve the bucket id — a bare orderBy window
-    # over the data order would show an un-bucketed
-    # windowspecdefinition. This windowspec pinning replaces the old
-    # blunt "no Exchange SinglePartition" substring ban, which
-    # false-positives on the r13 lazy prefix-sum's two BENIGN bounded
-    # single-partition steps (the 1-row min/max bounds scalar and the
-    # ≤num_buckets bases window over bucket ids).
-    import re
-
-    specs = re.findall(r"windowspecdefinition\(([^)]*)\)", plan)
-    assert specs, plan
-    assert all("_pid" in s for s in specs), specs
-    assert "hashpartitioning(_pid" in plan, plan
+    _assert_windows_bucketed(physical_plan(df))
 
 
 def test_mix_by_hash_zero_exchange(spark):
@@ -259,14 +264,13 @@ def test_minhash_md5_no_nested_loop(spark):
 
 def test_epoch_shuffle_no_single_partition_sort(spark):
     """The seeded permutation must rank via bucket bases + local
-    windows — a global ORDER BY row_number would plan an Exchange
-    SinglePartition and ship the corpus to one task."""
+    windows — a global ORDER BY row_number would ship the corpus to
+    one task."""
     from telescope_data_pipeline_spark.plans.audit import physical_plan
 
     df = get("q_epoch_shuffle").fn(spark, SF)
     df.collect()
-    plan = physical_plan(df)
-    assert "Exchange SinglePartition" not in plan, plan
+    _assert_windows_bucketed(physical_plan(df))
 
 
 def test_length_batches_no_single_partition_sort(spark):
@@ -276,8 +280,7 @@ def test_length_batches_no_single_partition_sort(spark):
 
     df = get("q_length_batches").fn(spark, SF)
     df.collect()
-    plan = physical_plan(df)
-    assert "Exchange SinglePartition" not in plan, plan
+    _assert_windows_bucketed(physical_plan(df))
 
 
 def test_simhash_md5_no_nested_loop(spark):
@@ -776,15 +779,26 @@ def test_doremi_broadcasts_model(spark):
                 absent=("SortMergeJoin", "CartesianProduct"))
 
 
-def test_shard_export_no_single_partition_exchange(spark):
+def test_shard_export_no_single_partition_exchange(spark, monkeypatch):
     """Shard assignment must run on the distributed prefix-sum scaffold —
-    a global orderBy window would collapse the corpus to one task."""
+    a global orderBy window would collapse the corpus to one task. The
+    prefix sum lives in the shard WRITE (the returned manifest only
+    reads the files back), so the pin inspects the written DataFrame."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
     from telescope_data_pipeline_spark.plans.audit import physical_plan
 
-    df = get("q_shard_export").fn(spark, SF)
-    df.collect()  # finalize AQE
-    plan = physical_plan(df)
-    assert "Exchange SinglePartition" not in plan, plan
+    written = []
+    parquet = DataFrameWriter.parquet
+
+    def spy(self, path, *args, **kwargs):
+        written.append(self._df)
+        return parquet(self, path, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", spy)
+    get("q_shard_export").fn(spark, SF).collect()
+    (shards,) = written
+    _assert_windows_bucketed(physical_plan(shards))
 
 
 def test_shard_export_span_guard_is_live(spark, tmp_path):

@@ -145,14 +145,14 @@ def test_prefix_sum_matches_sequential_fold(spark, keys, n_parts):
     """Any unique integral key set, any shard count: the distributed
     prefix sum equals the sequential cumulative sum in key order."""
     from telescope_data_pipeline_spark.operators.prefix_sum import (
-        distributed_prefix_sum,
+        lazy_prefix_sum,
     )
 
     rows = [(k, (k % 13) - 6) for k in keys]
     df = spark.createDataFrame(rows, "k long, v long")
     got = {r.k: r.cum for r in
-           distributed_prefix_sum(df, "k", "v",
-                                  num_partitions=n_parts).collect()}
+           lazy_prefix_sum(df, "k", ["k"], "v",
+                           num_buckets=n_parts).collect()}
     acc = 0
     for k, v in sorted(rows):
         acc += v
@@ -164,16 +164,21 @@ def test_prefix_sum_matches_sequential_fold(spark, keys, n_parts):
                 min_size=1, max_size=60, unique=True),
        st.integers(min_value=1, max_value=9))
 def test_distributed_row_number_matches_sort(spark, keys, n_parts):
-    """Any unique key set, any shard count: positions equal the rank in
-    a plain sort."""
+    """Any unique key set, any bucket count, bucketed by a coarser
+    monotone ``bucket_key`` projection (many rows per bucket, ties inside
+    a bucket resolve by the full order): positions equal the rank in a
+    plain sort."""
+    from pyspark.sql import functions as F
+
     from telescope_data_pipeline_spark.operators.rank import (
-        distributed_row_number,
+        lazy_row_number,
     )
 
     df = spark.createDataFrame([(k,) for k in keys], "k long")
     got = {r.k: r.position for r in
-           distributed_row_number(df, order_cols=["k"],
-                                  num_partitions=n_parts).collect()}
+           lazy_row_number(df, order_cols=["k"],
+                           bucket_key=F.floor(F.col("k") / 1000),
+                           num_buckets=n_parts).collect()}
     for pos, k in enumerate(sorted(keys)):
         assert got[k] == pos
 
@@ -183,12 +188,9 @@ def test_distributed_row_number_matches_sort(spark, keys, n_parts):
                 min_size=1, max_size=60, unique=True),
        st.integers(min_value=1, max_value=9))
 def test_lazy_row_number_matches_sort(spark, keys, n_buckets):
-    """The r13 fully-lazy twin: any unique key set, any bucket count —
-    positions equal the rank in a plain sort (bucket-boundary
-    differences must never move a global position; the eager CacheSlot
-    form is held to the same sorted-rank contract by
-    test_distributed_row_number_matches_sort above, so agreement with
-    the sort implies agreement between the two forms)."""
+    """Any unique key set, any bucket count, bucketed by the order
+    column itself: positions equal the rank in a plain sort —
+    bucket-boundary differences must never move a global position."""
     from telescope_data_pipeline_spark.operators.rank import (
         lazy_row_number,
     )

@@ -148,6 +148,59 @@ def test_cache_slot_degrades_to_unconditional_evict(spark):
         spark.catalog.clearCache()
 
 
+def _run_together(n: int, fn) -> list:
+    """Call ``fn(i)`` from ``n`` threads released at once; return the
+    results in thread order."""
+    import threading
+
+    start = threading.Barrier(n)
+    out = [None] * n
+
+    def work(i):
+        start.wait()
+        out[i] = fn(i)
+
+    threads = [threading.Thread(target=work, args=(i,)) for i in range(n)]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join()
+    return out
+
+
+def test_cache_slot_concurrent_owners_leave_one_cache(spark):
+    """Eight threads owning distinct DataFrames on one slot at once must
+    leave exactly one of them cached: an unlocked read-evict-write lets
+    two owners evict the same predecessor and strand a cache."""
+    from telescope_data_pipeline_spark.operators.cache_slot import CacheSlot
+
+    slot = CacheSlot()
+    dfs = [spark.range(i + 1) for i in range(8)]
+    try:
+        owned = _run_together(8, lambda i: slot.own(dfs[i]))
+        assert sum(d.is_cached for d in owned) == 1
+        assert slot._last.is_cached
+    finally:
+        spark.catalog.clearCache()
+
+
+def test_stock_coalesce_floor_concurrent_callers_share_one_child(spark):
+    """Eight threads asking for the stock-floor child session at once
+    get ONE identical child (no duplicate sessions racing in)."""
+    from telescope_data_pipeline_spark.session import stock_coalesce_floor
+
+    prev = getattr(spark, "_tdp_stock_floor_session", None)
+    if prev is not None:
+        del spark._tdp_stock_floor_session
+    try:
+        children = _run_together(8, lambda i: stock_coalesce_floor(spark))
+        assert all(c is children[0] for c in children)
+        assert children[0] is not spark
+    finally:
+        if prev is not None:
+            spark._tdp_stock_floor_session = prev
+
+
 def test_byte_string_conf_parsing():
     """maxPartitionBytes accepts JVM byte-string suffixes; the spread
     heuristic must parse them like JavaUtils.byteStringAsBytes

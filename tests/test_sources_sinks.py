@@ -46,6 +46,25 @@ def test_fits_scan_decodes_binary_files(spark):
     assert len(r["img0.fits"].pixels) == 32 * 32
 
 
+def test_fits_scan_drops_file_with_malformed_header_value(spark):
+    """One decodable file whose AIRMASS does not parse as a float is
+    dropped like an undecodable one — never fatal to the scan — and
+    the good files still come through (same rule as the registered
+    fits data source)."""
+    d = tempfile.mkdtemp(prefix="fits_bad_hdr_")
+    rng = np.random.default_rng(4)
+    hdr = {"FILTER": "V", "AIRMASS": "1.3", "EXPTIME": "60.0",
+           "DATE-OBS": "2024-03-01T00:00:00", "SITEID": "syn"}
+    for name, airmass in (("good0", "1.3"), ("bad", "abc"),
+                          ("good1", "1.4")):
+        write_fake_fits(os.path.join(d, f"{name}.fits"),
+                        rng.normal(100, 2, (16, 16)).astype(np.float32),
+                        {**hdr, "AIRMASS": airmass})
+    out = scan_fits_dir(spark, d).collect()
+    assert sorted((r.filename, r.airmass) for r in out) == [
+        ("good0.fits", 1.3), ("good1.fits", 1.4)]
+
+
 @pytest.fixture(scope="module")
 def detections(spark):
     images, _, _ = make_synthetic_images(spark, n_epochs=2)
